@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Benchmark harness (driver contract): run the headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: the host's CPU count) and print ONE
+JSON line:
     {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Timing methodology:
@@ -35,7 +36,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from mapreduce_in_pthreads_spark.plans.registry import REGISTRY  # noqa: E402
-from mapreduce_in_pthreads_spark.session import get_spark  # noqa: E402
+from mapreduce_in_pthreads_spark.session import (  # noqa: E402
+    default_cpus, get_spark)
 
 HEADLINE = [
     "inverted_index",          # reference flagship (R1-R11)
@@ -107,7 +109,7 @@ def main() -> None:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         # r11 (VERDICT r10 item 6): record the core count the run
         # actually used so scaling artifacts are self-describing.
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": default_cpus(),
     }))
 
 

@@ -16,6 +16,11 @@ from pyspark.sql import SparkSession
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS`` if set, else the host's CPU count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
 def get_spark(app_name: str = "mapreduce-in-pthreads-spark",
               cpus: int | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for this engine.
@@ -28,7 +33,7 @@ def get_spark(app_name: str = "mapreduce-in-pthreads-spark",
     - Session timezone pinned to UTC so timestamp semantics match the
       DuckDB oracle (which reads parquet timestamps as naive UTC).
     """
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpus or default_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")

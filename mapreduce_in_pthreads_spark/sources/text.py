@@ -10,12 +10,25 @@ precedes the skip at 112-114).
 DataFrames have no row order, so per-file ordinals are the one place
 the reference's semantics need deliberate engineering (SURVEY.md §7):
 
-- default path: ``spark.read.text(wholeText=True)`` — one row per
-  file — then ``posexplode`` over the split lines. The ordinal is the
-  explode position, computed *before* any filtering, exactly like the
-  reference. One file = one row = one task; parallelism = #files,
-  which is precisely the reference's map-side DOP (``-p`` spawns one
-  producer per file, mapreduce.c:307-313).
+- default path: ``spark.read.format("binaryFile")`` — one row per
+  file — decoded as Latin-1 and split into the file's physical lines
+  (``read_file_lines``), then ``posexplode`` over those lines. The
+  ordinal is the explode position, computed *before* any filtering,
+  exactly like the reference. One file = one row = one task;
+  parallelism = #files, which is precisely the reference's map-side
+  DOP (``-p`` spawns one producer per file, mapreduce.c:307-313).
+- file listing happens on the driver. Spark already stats every
+  explicit path there while it resolves the relation
+  (``DataSource.checkAndGlobPathIfNecessary``); above
+  ``spark.sql.sources.parallelPartitionDiscovery.threshold`` paths (32
+  by default) it would also launch a listing job with one task per
+  path, before any action runs, only to stat the same files again. The
+  loader raises the threshold to the path count for the one ``load``
+  call, so building a query over N named files launches no job.
+  Scale note: for 10^5+ files on an object store, pass the containing
+  directory instead of the file list. A directory is one root, listed
+  by one call on the driver, so neither the threshold nor a stat per
+  file applies to it.
 - ``big_files=True`` path: per-file RDD ``zipWithIndex`` for corpora
   whose individual files don't fit in one task's memory. Scale note:
   at 100 TB you'd use the default path over many files (the normal
@@ -39,30 +52,35 @@ CORPUS_SCHEMA = StructType([
 # becomes SEVERAL records, each incrementing linenum (mapreduce.c:109).
 FGETS_BUF = 49
 
+# Path count above which Spark lists files with a distributed job.
+LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
-def read_word_per_line(spark: SparkSession, paths: str | list[str],
-                       big_files: bool = False,
-                       strict_fgets: bool = False) -> DataFrame:
-    """Read text file(s) → DataFrame[filename, linenum, raw_line].
 
-    ``linenum`` is the 1-based physical line ordinal per file and is
-    assigned BEFORE any normalization/filtering (mapreduce.c:109).
-    A single trailing newline does not create a phantom final line
-    (fgets never yields one, mapreduce.c:107).
+def _load_binary(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """binaryFile relation over ``paths``, listed on the driver.
 
-    ``strict_fgets=True`` additionally replicates the reference's
-    49-byte read buffer (SURVEY.md §1.3 quirk #2): each fgets(50) call
-    is one numbered record, so a physical line of L bytes (+ newline)
-    yields ceil((L+1)/49) records — the trailing record holding only
-    the newline when L is an exact multiple of 49. The committed
-    reference corpus never exceeds 49 bytes per line, so the default
-    path is golden-identical there; strict mode exists for byte-level
-    parity on corpora the reference would truncate.
+    The threshold is read only while ``load`` resolves the relation
+    (the file index is built then), so it is raised for that call
+    alone and restored even when ``load`` raises, leaving a shared
+    session's conf as the caller had it."""
+    prior = spark.conf.get(LISTING_THRESHOLD)
+    spark.conf.set(LISTING_THRESHOLD, str(max(int(prior), len(paths))))
+    try:
+        return spark.read.format("binaryFile").load(paths)
+    finally:
+        spark.conf.set(LISTING_THRESHOLD, prior)
+
+
+def read_file_lines(spark: SparkSession, paths: str | list[str],
+                    strict_fgets: bool = False) -> DataFrame:
+    """Read text file(s) → DataFrame[filename, lines], one row per file.
+
+    ``lines`` holds the file's records in order, so an element's
+    1-based position is its ``linenum`` (see ``read_word_per_line``
+    for the record rules and ``strict_fgets``).
     """
     if isinstance(paths, str):
         paths = [paths]
-    if big_files:
-        return _read_big_files(spark, paths)
     # binaryFile + Latin-1 decode, NOT spark.read.text: the text source
     # strips a leading UTF-8 BOM, but the reference reads raw bytes
     # (fgets, mapreduce.c:107) and its golden output depends on the BOM
@@ -79,7 +97,7 @@ def read_word_per_line(spark: SparkSession, paths: str | list[str],
         txt.endswith("\n"),
         F.slice(raw_lines, F.lit(1), F.size(raw_lines) - 1),
     ).otherwise(raw_lines)
-    whole = spark.read.format("binaryFile").load(paths).select(
+    whole = _load_binary(spark, paths).select(
         F.col("path").alias("filename"),
         lines.alias("lines"),
         txt.endswith("\n").alias("ends_nl"),
@@ -106,10 +124,34 @@ def read_word_per_line(spark: SparkSession, paths: str | list[str],
                                         {FGETS_BUF}))
                 END))
         """)
-        whole = whole.select("filename", all_chunks.alias("lines"))
-    else:
-        whole = whole.select("filename", "lines")
-    return whole.select(
+        return whole.select("filename", all_chunks.alias("lines"))
+    return whole.select("filename", "lines")
+
+
+def read_word_per_line(spark: SparkSession, paths: str | list[str],
+                       big_files: bool = False,
+                       strict_fgets: bool = False) -> DataFrame:
+    """Read text file(s) → DataFrame[filename, linenum, raw_line].
+
+    ``linenum`` is the 1-based physical line ordinal per file and is
+    assigned BEFORE any normalization/filtering (mapreduce.c:109).
+    A single trailing newline does not create a phantom final line
+    (fgets never yields one, mapreduce.c:107).
+
+    ``strict_fgets=True`` additionally replicates the reference's
+    49-byte read buffer (SURVEY.md §1.3 quirk #2): each fgets(50) call
+    is one numbered record, so a physical line of L bytes (+ newline)
+    yields ceil((L+1)/49) records — the trailing record holding only
+    the newline when L is an exact multiple of 49. The committed
+    reference corpus never exceeds 49 bytes per line, so the default
+    path is golden-identical there; strict mode exists for byte-level
+    parity on corpora the reference would truncate.
+    """
+    if isinstance(paths, str):
+        paths = [paths]
+    if big_files:
+        return _read_big_files(spark, paths)
+    return read_file_lines(spark, paths, strict_fgets).select(
         "filename",
         F.posexplode("lines").alias("pos0", "raw_line"),
     ).select(

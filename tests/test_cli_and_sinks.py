@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from mapreduce_in_pthreads_spark.cli import build_index
 from mapreduce_in_pthreads_spark.sources.sinks import (
     write_partitioned, write_text_report)
+from mapreduce_in_pthreads_spark.sources.text import LISTING_THRESHOLD
 
 REF = Path("/root/reference")
 SCRATCH = Path("/root/repo/.scratch")
@@ -46,6 +47,88 @@ def test_cli_output_matches_reference_golden(spark):
                   for r in df.collect())
     golden = _parse((REF / "output.txt").read_text().splitlines())
     assert mine == golden
+
+
+def _spec_report(files: dict[str, bytes]) -> list[str]:
+    """FIXTURES.md A1/A2 in plain Python: the lines of a file are its
+    Latin-1 text split on \\n, where a final \\n ends the last line
+    rather than starting an empty one (fgets); every line is numbered
+    from 1; its word is the leading [a-z0-9]* run of the lowercased
+    line; empty words are dropped after numbering. Report lines are
+    ``word: (file: line), …`` with occurrences in (file, line) order."""
+    occ: dict[str, list] = {}
+    for name, data in files.items():
+        lines = data.decode("latin-1").split("\n")
+        if data.endswith(b"\n"):
+            lines.pop()
+        for num, line in enumerate(lines, 1):
+            word = re.match("[a-z0-9]*", line.lower()).group()
+            if word:
+                occ.setdefault(word, []).append((name, num))
+    return sorted(
+        f"{w}: " + ", ".join(f"({f}: {n})" for f, n in sorted(v))
+        for w, v in occ.items())
+
+
+def test_build_index_matches_spec_mirror(spark, tmp_path):
+    """``build_index`` over more files than Spark's parallel-listing
+    threshold (32), line for line against the spec mirror. The corpus
+    carries every edge the reference's layout has: a UTF-8 BOM first
+    line, CRLF endings, lines that normalize to empty, bytes above
+    0x7F, one file with no trailing newline and one empty file."""
+    import random
+
+    rng = random.Random(7)
+    vocab = [b"The", b"the", b"don't", b"Macbeth.", b"3rd", b"2000",
+             b"KING", b"caf\xe9", b"\xe9t\xe9", b"'tis", b"", b"   ",
+             b"---", b"o'er", b"Ab1c"]
+    files = {}
+    for i in range(1, 35):
+        lines = [rng.choice(vocab) for _ in range(rng.randint(5, 40))]
+        if i == 1:
+            lines.insert(0, b"\xef\xbb\xbf")
+        files[f"file{i}.txt"] = b"".join(w + b"\r\n" for w in lines)
+    files["file2.txt"] += b"last"
+    files["file3.txt"] = b""
+    for name, data in files.items():
+        (tmp_path / name).write_bytes(data)
+
+    df = build_index(spark, [str(tmp_path / n) for n in files])
+    got = sorted(f"{r.word}: {r.occurrences}" for r in df.collect())
+    want = _spec_report(files)
+    assert got == want
+    # the BOM line is numbered, then dropped
+    assert "(file1.txt: 1)" not in "\n".join(want)
+
+
+def test_build_index_launches_no_job_before_action(spark, tmp_path):
+    """Building the index over 40 named files — more than Spark's
+    parallel-listing threshold — lists them on the driver: no Spark
+    job runs until an action does. The threshold conf is left as it
+    was, also when a missing path makes the load raise."""
+    import uuid
+
+    paths = []
+    for i in range(1, 41):
+        p = tmp_path / f"file{i}.txt"
+        p.write_text(f"w{i}\n")
+        paths.append(str(p))
+    prior = spark.conf.get(LISTING_THRESHOLD)
+    assert len(paths) > int(prior)
+    sc = spark.sparkContext
+    group = f"build-index-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "build_index construction")
+    try:
+        df = build_index(spark, paths)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert spark.conf.get(LISTING_THRESHOLD) == prior
+    assert df.count() == 40
+
+    with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+        build_index(spark, paths + [str(tmp_path / "missing.txt")])
+    assert spark.conf.get(LISTING_THRESHOLD) == prior
 
 
 def test_cli_missing_file_is_noop(spark, tmp_path, capsys):

@@ -15,6 +15,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
+from mapreduce_in_pthreads_spark.cli import build_index
 from mapreduce_in_pthreads_spark.functions.normalize import normalize_word
 from mapreduce_in_pthreads_spark.sources.text import read_word_per_line
 
@@ -27,11 +28,11 @@ pytestmark = pytest.mark.skipif(
     not GOLDEN.exists(), reason="reference corpus not present")
 
 
-def parse_golden() -> dict[str, Counter]:
-    """golden line format: ``word: (file1.txt: 12), (file2.txt: 3), …``
+def parse_report(lines) -> dict[str, Counter]:
+    """report line format: ``word: (file1.txt: 12), (file2.txt: 3), …``
     (mapreduce.c:171,180,218)."""
     out: dict[str, Counter] = {}
-    for line in GOLDEN.read_text().splitlines():
+    for line in lines:
         word, _, rest = line.partition(": ")
         occ = Counter(
             (m.group(1), int(m.group(2)))
@@ -40,21 +41,16 @@ def parse_golden() -> dict[str, Counter]:
     return out
 
 
+def parse_golden() -> dict[str, Counter]:
+    return parse_report(GOLDEN.read_text().splitlines())
+
+
 def engine_index(spark) -> dict[str, Counter]:
-    corpus = read_word_per_line(spark, [str(p) for p in TESTFILES])
-    words = (
-        corpus.select(
-            # golden uses bare file names (argv strings, mapreduce.c:309)
-            F.element_at(F.split("filename", "/"), -1).alias("filename"),
-            "linenum",
-            normalize_word("raw_line").alias("word"))
-        .filter(F.col("word") != "")
-    )
-    rows = words.collect()
-    out: dict[str, Counter] = {}
-    for r in rows:
-        out.setdefault(r.word, Counter())[(r.filename, r.linenum)] += 1
-    return out
+    """The shipped job, ``cli.build_index``, parsed like the golden.
+    Its file names are bare basenames, as the golden's are (argv
+    strings, mapreduce.c:309)."""
+    rows = build_index(spark, [str(p) for p in TESTFILES]).collect()
+    return parse_report(f"{r.word}: {r.occurrences}" for r in rows)
 
 
 def test_golden_replay(spark):
