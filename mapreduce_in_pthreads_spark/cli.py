@@ -22,39 +22,15 @@ import argparse
 import os
 import sys
 
-from pyspark.sql import functions as F
-
-from .functions.normalize import normalize_word
+from .operators.inverted_index import file_index
 from .session import get_spark
 from .sources.text import read_file_lines
 
 
-def build_index(spark, paths: list[str]):
-    # one row per file, so the basename is computed once per file
-    files = read_file_lines(spark, paths).select(
-        F.element_at(F.split("filename", "/"), -1).alias("filename"),
-        "lines")
-    # Normalize inside the generator and filter its output column, so
-    # each line is normalized exactly once. A filter on
-    # ``normalize_word(raw_line)`` over exploded lines would be pushed
-    # below the projection, evaluating the regex twice per line; a
-    # generated column cannot move below its Generate. The generator's
-    # input is an expression, not a column, so Catalyst infers no
-    # ``size(...) > 0`` filter that would evaluate it once more.
-    words = (
-        files.select("filename", F.posexplode(
-            F.transform("lines", normalize_word)).alias("pos0", "word"))
-        .filter(F.col("word") != "")
-    )
-    occ = F.sort_array(F.collect_list(F.struct(
-        "filename", (F.col("pos0") + 1).alias("linenum"))))
-    return words.groupBy("word").agg(
-        F.concat_ws(
-            ", ",
-            F.transform(occ, lambda o: F.format_string(
-                "(%s: %s)", o["filename"], o["linenum"]))
-        ).alias("occurrences"),
-    )
+def build_index(spark, paths: str | list[str]):
+    """The reference's index over the named files (or a directory):
+    ``(word, occurrences)`` rows, one per distinct word."""
+    return file_index(read_file_lines(spark, paths))
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -84,6 +84,46 @@ def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def file_words(files: DataFrame) -> DataFrame:
+    """Word-per-line files → (filename, linenum, word), nonempty words.
+
+    ``files`` is ``(filename, lines)``, one row per file, batch or
+    streaming (``sources.text``). ``filename`` becomes the bare name,
+    like the reference's argv strings (mapreduce.c:309), computed once
+    per file; ``linenum`` is the line's 1-based position, assigned
+    before empty words are dropped (mapreduce.c:109-114)."""
+    named = files.select(
+        F.element_at(F.split("filename", "/"), -1).alias("filename"),
+        "lines")
+    # Normalize inside the generator and filter its output column, so
+    # each line is normalized exactly once. A filter on
+    # ``normalize_word(raw_line)`` over exploded lines would be pushed
+    # below the projection, evaluating the regex twice per line; a
+    # generated column cannot move below its Generate. The generator's
+    # input is an expression, not a column, so Catalyst infers no
+    # ``size(...) > 0`` filter that would evaluate it once more.
+    return (
+        named.select("filename", F.posexplode(
+            F.transform("lines", normalize_word)).alias("pos0", "word"))
+        .filter(F.col("word") != "")
+        .select("filename", (F.col("pos0") + 1).alias("linenum"), "word")
+    )
+
+
+def file_index(files: DataFrame) -> DataFrame:
+    """Word-per-line files, batch or streaming → (word, occurrences):
+    the reference's report line ``word: (file: line), …``
+    (mapreduce.c:171,180,218), occurrences in (file, line) order."""
+    occ = F.sort_array(F.collect_list(F.struct("filename", "linenum")))
+    return file_words(files).groupBy("word").agg(
+        F.concat_ws(
+            ", ",
+            F.transform(occ, lambda o: F.format_string(
+                "(%s: %s)", o["filename"], o["linenum"])),
+        ).alias("occurrences"),
+    )
+
+
 INVERTED_INDEX_SQL = f"""
 SELECT word,
        count(*) AS n_occurrences,

@@ -29,23 +29,23 @@ the reference's semantics need deliberate engineering (SURVEY.md §7):
   directory instead of the file list. A directory is one root, listed
   by one call on the driver, so neither the threshold nor a stat per
   file applies to it.
-- ``big_files=True`` path: per-file RDD ``zipWithIndex`` for corpora
-  whose individual files don't fit in one task's memory. Scale note:
-  at 100 TB you'd use the default path over many files (the normal
-  shape for training corpora), not few giant ones.
+- stream path (``stream_file_lines``): ``spark.readStream`` over the
+  same binaryFile source, one file per micro-batch, with the same
+  decode and split. Files are read in modification-time order, each
+  path is read once (a shard landing later is read whatever its name),
+  and files whose names start with ``.`` or ``_`` are skipped. A file
+  stream cannot infer a schema, so binaryFile's fixed schema is given
+  explicitly.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-CORPUS_SCHEMA = StructType([
-    StructField("filename", StringType(), False),
-    StructField("linenum", IntegerType(), False),
-    StructField("raw_line", StringType(), True),
-])
+# binaryFile's fixed schema; a file stream will not infer one.
+BINARY_FILE_SCHEMA = ("path string, modificationTime timestamp, "
+                      "length bigint, content binary")
 
 # The reference's line buffer is MAXLEN=50 (mapreduce.c:19,105), so
 # each fgets call returns at most 49 bytes — a longer physical line
@@ -56,13 +56,15 @@ FGETS_BUF = 49
 LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
 
-def _load_binary(spark: SparkSession, paths: list[str]) -> DataFrame:
+def _load_binary(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     """binaryFile relation over ``paths``, listed on the driver.
 
     The threshold is read only while ``load`` resolves the relation
     (the file index is built then), so it is raised for that call
     alone and restored even when ``load`` raises, leaving a shared
     session's conf as the caller had it."""
+    if isinstance(paths, str):
+        paths = [paths]
     prior = spark.conf.get(LISTING_THRESHOLD)
     spark.conf.set(LISTING_THRESHOLD, str(max(int(prior), len(paths))))
     try:
@@ -71,16 +73,16 @@ def _load_binary(spark: SparkSession, paths: list[str]) -> DataFrame:
         spark.conf.set(LISTING_THRESHOLD, prior)
 
 
-def read_file_lines(spark: SparkSession, paths: str | list[str],
-                    strict_fgets: bool = False) -> DataFrame:
-    """Read text file(s) → DataFrame[filename, lines], one row per file.
+def _records(binary: DataFrame,
+             strict_fgets: bool) -> tuple[DataFrame, Column]:
+    """binaryFile relation, batch or streaming → (relation, records):
+    ``records`` is an expression over ``relation`` holding each file's
+    records in order (see ``read_word_per_line`` for the rules).
 
-    ``lines`` holds the file's records in order, so an element's
-    1-based position is its ``linenum`` (see ``read_word_per_line``
-    for the record rules and ``strict_fgets``).
-    """
-    if isinstance(paths, str):
-        paths = [paths]
+    Callers project or explode ``records`` itself. Exploding a column
+    projected from it would make Catalyst infer ``size(lines) > 0`` and
+    push that filter below the projection, decoding and splitting
+    every file a second time."""
     # binaryFile + Latin-1 decode, NOT spark.read.text: the text source
     # strips a leading UTF-8 BOM, but the reference reads raw bytes
     # (fgets, mapreduce.c:107) and its golden output depends on the BOM
@@ -97,39 +99,66 @@ def read_file_lines(spark: SparkSession, paths: str | list[str],
         txt.endswith("\n"),
         F.slice(raw_lines, F.lit(1), F.size(raw_lines) - 1),
     ).otherwise(raw_lines)
-    whole = _load_binary(spark, paths).select(
-        F.col("path").alias("filename"),
-        lines.alias("lines"),
-        txt.endswith("\n").alias("ends_nl"),
-    )
-    if strict_fgets:
-        # One record per fgets(50) call: chunk every physical line into
-        # 49-byte reads; the newline counts as the +1 byte of the final
-        # read (it lands in the buffer and trims away downstream), so a
-        # line whose content length is an exact multiple of 49 gets one
-        # extra record holding just the newline. Pure expression — the
-        # flatten preserves file order, so posexplode positions ARE the
-        # fgets call ordinals.
-        all_chunks = F.expr(f"""
-            flatten(transform(lines, (line, i) ->
-                CASE WHEN length(line)
-                          + IF(i < size(lines) - 1 OR ends_nl, 1, 0) = 0
-                     THEN array()
-                     ELSE transform(
-                         sequence(0,
-                             cast(ceil((length(line)
-                                 + IF(i < size(lines) - 1 OR ends_nl,
-                                      1, 0)) / {FGETS_BUF}.0) as int) - 1),
-                         j -> substring(line, j * {FGETS_BUF} + 1,
-                                        {FGETS_BUF}))
-                END))
-        """)
-        return whole.select("filename", all_chunks.alias("lines"))
-    return whole.select("filename", "lines")
+    if not strict_fgets:
+        return binary, lines
+    # One record per fgets(50) call: chunk every physical line into
+    # 49-byte reads; the newline counts as the +1 byte of the final
+    # read (it lands in the buffer and trims away downstream), so a
+    # line whose content length is an exact multiple of 49 gets one
+    # extra record holding just the newline. Pure expression — the
+    # flatten preserves file order, so posexplode positions ARE the
+    # fgets call ordinals. It reads ``lines`` once per element, so
+    # ``lines`` is projected first rather than inlined.
+    chunks = F.expr(f"""
+        flatten(transform(lines, (line, i) ->
+            CASE WHEN length(line)
+                      + IF(i < size(lines) - 1 OR ends_nl, 1, 0) = 0
+                 THEN array()
+                 ELSE transform(
+                     sequence(0,
+                         cast(ceil((length(line)
+                             + IF(i < size(lines) - 1 OR ends_nl,
+                                  1, 0)) / {FGETS_BUF}.0) as int) - 1),
+                     j -> substring(line, j * {FGETS_BUF} + 1,
+                                    {FGETS_BUF}))
+            END))
+    """)
+    return binary.select(
+        "path", lines.alias("lines"), txt.endswith("\n").alias("ends_nl"),
+    ), chunks
+
+
+def _file_lines(binary: DataFrame) -> DataFrame:
+    """binaryFile relation, batch or streaming → DataFrame[filename,
+    lines], one row per file.
+
+    ``lines`` holds the file's physical lines in order, so an element's
+    1-based position is its ``linenum`` (see ``read_word_per_line``
+    for the rules).
+    """
+    relation, lines = _records(binary, strict_fgets=False)
+    return relation.select(F.col("path").alias("filename"),
+                           lines.alias("lines"))
+
+
+def read_file_lines(spark: SparkSession,
+                    paths: str | list[str]) -> DataFrame:
+    """Read text file(s) → DataFrame[filename, lines], one row per file
+    (``_file_lines`` over a binaryFile relation listed on the driver)."""
+    return _file_lines(_load_binary(spark, paths))
+
+
+def stream_file_lines(spark: SparkSession, directory: str) -> DataFrame:
+    """Streaming DataFrame[filename, lines] over the files arriving
+    under ``directory``, one file per micro-batch."""
+    return _file_lines(
+        spark.readStream.format("binaryFile")
+        .schema(BINARY_FILE_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .load(directory))
 
 
 def read_word_per_line(spark: SparkSession, paths: str | list[str],
-                       big_files: bool = False,
                        strict_fgets: bool = False) -> DataFrame:
     """Read text file(s) → DataFrame[filename, linenum, raw_line].
 
@@ -147,31 +176,12 @@ def read_word_per_line(spark: SparkSession, paths: str | list[str],
     path is golden-identical there; strict mode exists for byte-level
     parity on corpora the reference would truncate.
     """
-    if isinstance(paths, str):
-        paths = [paths]
-    if big_files:
-        return _read_big_files(spark, paths)
-    return read_file_lines(spark, paths, strict_fgets).select(
-        "filename",
-        F.posexplode("lines").alias("pos0", "raw_line"),
+    relation, records = _records(_load_binary(spark, paths), strict_fgets)
+    return relation.select(
+        F.col("path").alias("filename"),
+        F.posexplode(records).alias("pos0", "raw_line"),
     ).select(
         "filename",
         (F.col("pos0") + 1).cast("int").alias("linenum"),
         "raw_line",
     )
-
-
-def _read_big_files(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """RDD zipWithIndex per file — line numbers without materializing a
-    whole file in one task. One sc.textFile per path keeps ordinals
-    per-file (zipWithIndex is ordered within a single file's splits)."""
-    sc = spark.sparkContext
-    dfs = []
-    for p in paths:
-        rdd = sc.textFile(p).zipWithIndex().map(
-            lambda t, _p=p: (_p, t[1] + 1, t[0]))
-        dfs.append(spark.createDataFrame(rdd, CORPUS_SCHEMA))
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionAll(d)
-    return out

@@ -1,122 +1,26 @@
-"""A Python Data Source (Spark 4 ``pyspark.sql.datasource`` API) for
-the reference's word-per-line corpus format — the reference engine's
-input contract (one producer per ``testfiles/fileN.txt``, byte-faithful
-reads, per-file 1-based line numbers; mapreduce.c:97-138) expressed as
-a first-class ``spark.read.format("wordline")`` source.
+"""A Python Data Source sink (Spark 4 ``pyspark.sql.datasource`` API)
+for the reference's word-per-line corpus format:
+``df.write.format("wordline")`` writes one ``file<i>.txt`` per
+partition, the layout the reference reads (one producer per
+``testfiles/fileN.txt``, mapreduce.c:97-138, 307-313).
 
-Fidelity contract (same as ``sources/text.py``, which stays the hot
-path — binaryFile + expressions beats Python-per-row):
-- bytes decode Latin-1 (1:1 byte→char like the C buffer) so a UTF-8
-  BOM survives as content instead of being stripped;
-- ``linenum`` is the 1-based physical ordinal, assigned to EVERY line
-  including ones later dropped as empty (mapreduce.c:109 increments
-  before the 112-114 skip);
-- a single trailing newline yields no phantom final line (fgets
-  semantics); CRLF line ends keep their ``\\r`` in ``raw_line``.
-
-Scale notes: one InputPartition per file = the reference's map-side
-DOP (``-p`` spawns one producer per file, mapreduce.c:307-313); Spark
-schedules the partitions across executors. Missing files are skipped
-like the reference's no-op producer (mapreduce.c:100-103).
+Format contract, mirrored from the reader in ``sources/text.py``:
+one line per row, terminated by ``\\n``, with bytes encoded Latin-1
+(1:1 char→byte like the C buffer), so reading the directory back
+yields the same lines with per-file 1-based line numbers.
 """
 
 from __future__ import annotations
 
 import glob
 import os
-from collections.abc import Iterator, Sequence
-
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceReader,
     DataSourceWriter,
-    InputPartition,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
-
-WORDLINE_SCHEMA = "filename string, linenum int, raw_line string"
-
-
-def _expand(path: str) -> list[str]:
-    """Dir → its files; glob → matches; plain path → itself if it
-    exists (missing → skipped, the reference's no-op producer)."""
-    if os.path.isdir(path):
-        return sorted(
-            p for p in glob.glob(os.path.join(path, "*")) if os.path.isfile(p))
-    matches = sorted(p for p in glob.glob(path) if os.path.isfile(p))
-    return matches
-
-
-class WordLineReader(DataSourceReader):
-    def __init__(self, options: dict) -> None:
-        path = options.get("path")
-        if not path:
-            raise ValueError("wordline source requires a path, e.g. "
-                             "spark.read.format('wordline').load(dir)")
-        self._files = _expand(path)
-
-    def partitions(self) -> Sequence[InputPartition]:
-        # one partition per file == one reference producer per file
-        return [InputPartition(f) for f in self._files]
-
-    def read(self, partition: InputPartition) -> Iterator[tuple]:
-        yield from _read_file(partition.value)
-
-
-def _read_file(path: str) -> Iterator[tuple]:
-    """Shared fgets-faithful per-file record iterator (R1-R3)."""
-    with open(path, "rb") as fh:
-        text = fh.read().decode("latin-1")
-    lines = text.split("\n")
-    if text.endswith("\n"):
-        lines = lines[:-1]              # fgets: no phantom final line
-    for linenum, raw in enumerate(lines, start=1):
-        yield (path, linenum, raw)
-
-
-class WordLineStreamReader(SimpleDataSourceStreamReader):
-    """Streaming twin of the batch reader: the corpus arrives one FILE
-    per micro-batch, in sorted filename order — the Structured
-    Streaming analogue of the reference spawning one producer per file
-    (mapreduce.c:307-313), re-expressed as a replayable source. The
-    offset is simply the index of the next unread file, so
-    ``readBetweenOffsets`` replays any batch exactly (the contract
-    checkpoint recovery depends on); files appearing after the stream
-    starts are picked up because the listing re-expands on every
-    ``read`` call. A production source would track (file, mtime)
-    watermarks the way FileStreamSource does; the index offset is
-    enough for an immutable corpus."""
-
-    def __init__(self, options: dict) -> None:
-        path = options.get("path")
-        if not path:
-            raise ValueError("wordline stream requires a path")
-        self._path = path
-
-    def initialOffset(self) -> dict:
-        return {"idx": 0}
-
-    def read(self, start: dict):
-        files = _expand(self._path)
-        i = int(start["idx"])
-        if i >= len(files):
-            return iter(()), start      # caught up; offset unchanged
-        # iter(list), not a bare generator or list: the prefetch cache
-        # copy.copy()s the iterator for replay (generators can't be
-        # copied) and next()s it on the empty-batch path (lists aren't
-        # iterators)
-        return iter(list(_read_file(files[i]))), {"idx": i + 1}
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> list[tuple]:
-        files = _expand(self._path)
-        out: list[tuple] = []
-        for i in range(int(start["idx"]), int(end["idx"])):
-            if i < len(files):
-                out.extend(_read_file(files[i]))
-        return out
 
 
 @dataclass
@@ -136,7 +40,7 @@ class WordLineWriter(DataSourceWriter):
     - each task attempt writes its partition to a hidden
       ``.file<i>.txt.tmp-<taskAttemptId>`` (one file per partition =
       the per-reducer atomic block; i = partitionId + 1 matches the
-      reader/reference naming). The attempt id in the name is what
+      reference naming). The attempt id in the name is what
       makes this FileOutputCommitter-v1-safe: a speculated or retried
       attempt racing a zombie writes a DIFFERENT temp, so no attempt
       can interleave with or truncate another's bytes;
@@ -213,15 +117,6 @@ class WordLineDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
         return "wordline"
-
-    def schema(self) -> str:
-        return WORDLINE_SCHEMA
-
-    def reader(self, schema) -> WordLineReader:
-        return WordLineReader(self.options)
-
-    def simpleStreamReader(self, schema) -> WordLineStreamReader:
-        return WordLineStreamReader(self.options)
 
     def writer(self, schema, overwrite: bool) -> WordLineWriter:
         return WordLineWriter(self.options, overwrite)

@@ -1,15 +1,16 @@
-"""The flagship inverted index as a STREAMING query over the wordline
-source (SURVEY.md §7 stretch: a second wordline micro-batch scenario).
+"""The flagship inverted index as a STREAMING query over the
+word-per-line corpus (SURVEY.md §7 stretch: a second wordline
+micro-batch scenario).
 
 The reference engine is architecturally a stream processor — bounded
 producers feed blocking queues that consumers drain incrementally
 (mapreduce.c:75-87, 97-222) — but it can only ever run to completion
-over a fixed file list. This module runs the SAME logical index query
-as ``operators/inverted_index.py`` with files arriving one per
-micro-batch (``SimpleDataSourceStreamReader`` offsets = file index,
-``sources/wordline_datasource.py``), which is what "a new corpus shard
-landed" looks like in production: the index is re-emitted complete
-and correct after every arrival, no batch rebuild.
+over a fixed file list. This module runs the SAME plan as
+``cli.build_index`` (``operators.inverted_index.file_index``) with
+files arriving one per micro-batch (``sources.text.stream_file_lines``),
+which is what "a new corpus shard landed" looks like in production:
+the index is re-emitted complete and correct after every arrival, no
+batch rebuild.
 
 Execution contract:
 - complete output mode — the index aggregation state IS the index;
@@ -29,66 +30,32 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.normalize import normalize_word
-from ..sources import wordline_datasource
-
-
-def _index_over(lines: DataFrame) -> DataFrame:
-    """The shared logical plan: wordline rows → reference index rows
-    (``word, n_occurrences, occurrences``) — golden line format per
-    mapreduce.c:171,180,218, bare file names like argv (c:309)."""
-    words = (
-        lines.select(
-            F.element_at(F.split("filename", "/"), -1).alias("filename"),
-            "linenum",
-            normalize_word("raw_line").alias("word"))
-        .filter(F.col("word") != "")
-    )
-    occ = F.sort_array(F.collect_list(F.struct("filename", "linenum")))
-    return words.groupBy("word").agg(
-        F.count(F.lit(1)).alias("n_occurrences"),
-        F.concat_ws(
-            ", ",
-            F.transform(occ, lambda o: F.format_string(
-                "(%s: %s)", o["filename"], o["linenum"])),
-        ).alias("occurrences"),
-    )
+from ..operators.inverted_index import file_index, file_words
+from ..sources.text import read_file_lines, stream_file_lines
 
 
 def streaming_reference_index(spark: SparkSession, corpus: str) -> DataFrame:
-    """Unbounded variant: the index over every file that has arrived
-    under ``corpus`` so far, one file per micro-batch."""
-    wordline_datasource.register(spark)
-    return _index_over(spark.readStream.format("wordline").load(corpus))
+    """Unbounded variant of ``cli.build_index``: the index over every
+    file that has arrived under ``corpus`` so far, one file per
+    micro-batch."""
+    return file_index(stream_file_lines(spark, corpus))
 
 
-def batch_reference_index(spark: SparkSession, corpus: str) -> DataFrame:
-    """The identical logical plan on the batch reader — the parity
-    oracle for the streaming variant."""
-    wordline_datasource.register(spark)
-    return _index_over(spark.read.format("wordline").load(corpus))
-
-
-def _adjacent_pair_sides(lines: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Shared projection for the adjacent-word-pair join: each side is
-    the normalized nonempty word stream with a synthetic event time
-    derived from the line ordinal (epoch + linenum seconds) — the
-    wordline corpus has no timestamps, so the ordinal provides the
-    event-time axis the join's range condition is expressed on."""
-    words = (
-        lines.select(
-            F.element_at(F.split("filename", "/"), -1).alias("filename"),
-            "linenum",
-            normalize_word("raw_line").alias("word"),
-            F.timestamp_seconds(F.col("linenum")).alias("event_time"))
-        .filter(F.col("word") != ""))
+def _adjacent_pair_sides(words: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Shared projection for the adjacent-word-pair join over
+    ``file_words`` rows: each side is the nonempty word stream with a
+    synthetic event time derived from the line ordinal (epoch +
+    linenum seconds) — the wordline corpus has no timestamps, so the
+    ordinal provides the event-time axis the join's range condition is
+    expressed on."""
+    event_time = F.timestamp_seconds(F.col("linenum"))
     left = words.select(
         F.col("filename").alias("l_file"), F.col("linenum").alias("l_ln"),
-        F.col("word").alias("w1"), F.col("event_time").alias("l_time"),
+        F.col("word").alias("w1"), event_time.alias("l_time"),
         (F.col("linenum") + 1).alias("l_next"))
     right = words.select(
         F.col("filename").alias("r_file"), F.col("linenum").alias("r_ln"),
-        F.col("word").alias("w2"), F.col("event_time").alias("r_time"))
+        F.col("word").alias("w2"), event_time.alias("r_time"))
     return left, right
 
 
@@ -111,7 +78,7 @@ def _adjacent_pairs(left: DataFrame, right: DataFrame) -> DataFrame:
 
 def streaming_adjacent_word_pairs(spark: SparkSession,
                                   corpus: str) -> DataFrame:
-    """Stream-stream SELF-join over the wordline source — the ninth
+    """Stream-stream SELF-join over the corpus stream — the ninth
     streaming twin, and the first joining the corpus stream to itself:
     adjacent-line word pairs (the bigram relation of the word-per-line
     format) built while files arrive one per micro-batch. Inner join
@@ -130,10 +97,10 @@ def streaming_adjacent_word_pairs(spark: SparkSession,
     capped derivations as the declared 100 TB surface. The
     watermark+interval discipline for true event-time streams stays
     demonstrated by `streaming_purchase_click_join`."""
-    wordline_datasource.register(spark)
-    mk = lambda: spark.readStream.format("wordline").load(corpus)
-    left, _ = _adjacent_pair_sides(mk())
-    _, right = _adjacent_pair_sides(mk())
+    left, _ = _adjacent_pair_sides(
+        file_words(stream_file_lines(spark, corpus)))
+    _, right = _adjacent_pair_sides(
+        file_words(stream_file_lines(spark, corpus)))
     return _adjacent_pairs(left, right)
 
 
@@ -141,7 +108,6 @@ def batch_adjacent_word_pairs(spark: SparkSession,
                               corpus: str) -> DataFrame:
     """The identical logical plan on the batch reader — the parity
     oracle for the streaming self-join."""
-    wordline_datasource.register(spark)
-    lines = spark.read.format("wordline").load(corpus)
-    left, right = _adjacent_pair_sides(lines)
+    left, right = _adjacent_pair_sides(
+        file_words(read_file_lines(spark, corpus)))
     return _adjacent_pairs(left, right)

@@ -49,22 +49,31 @@ def test_cli_output_matches_reference_golden(spark):
     assert mine == golden
 
 
-def _spec_report(files: dict[str, bytes]) -> list[str]:
+def _spec_words(files: dict[str, bytes]) -> list[tuple[str, int, str]]:
     """FIXTURES.md A1/A2 in plain Python: the lines of a file are its
     Latin-1 text split on \\n, where a final \\n ends the last line
     rather than starting an empty one (fgets); every line is numbered
     from 1; its word is the leading [a-z0-9]* run of the lowercased
-    line; empty words are dropped after numbering. Report lines are
-    ``word: (file: line), …`` with occurrences in (file, line) order."""
-    occ: dict[str, list] = {}
+    line. Returns every ``(file, line, word)``, empty words included."""
+    out = []
     for name, data in files.items():
         lines = data.decode("latin-1").split("\n")
         if data.endswith(b"\n"):
             lines.pop()
         for num, line in enumerate(lines, 1):
-            word = re.match("[a-z0-9]*", line.lower()).group()
-            if word:
-                occ.setdefault(word, []).append((name, num))
+            out.append(
+                (name, num, re.match("[a-z0-9]*", line.lower()).group()))
+    return out
+
+
+def _spec_report(files: dict[str, bytes]) -> list[str]:
+    """The index over ``_spec_words``: empty words are dropped after
+    numbering. Report lines are ``word: (file: line), …`` with
+    occurrences in (file, line) order."""
+    occ: dict[str, list] = {}
+    for name, num, word in _spec_words(files):
+        if word:
+            occ.setdefault(word, []).append((name, num))
     return sorted(
         f"{w}: " + ", ".join(f"({f}: {n})" for f, n in sorted(v))
         for w, v in occ.items())

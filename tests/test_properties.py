@@ -47,21 +47,24 @@ def test_normalize_matches_spec(spark, lines):
     assert got == expect
 
 
-def test_result_invariant_under_input_file_order(spark):
+def test_result_invariant_under_input_file_order(spark, tmp_path):
     """Reference invariance: producers write in any order; results
     identical (SURVEY.md §2.2). Engine analogue: corpus file order."""
-    import glob
-
-    from pyspark.sql import functions as F
-
+    from mapreduce_in_pthreads_spark.cli import build_index
     from mapreduce_in_pthreads_spark.sources.text import read_word_per_line
 
-    paths = sorted(glob.glob("/root/reference/testfiles/file*.txt"))[:6]
-    fwd = read_word_per_line(spark, paths)
-    rev = read_word_per_line(spark, list(reversed(paths)))
-    agg = lambda df: sorted(
-        map(tuple, df.groupBy("filename").count().collect()))
-    assert agg(fwd) == agg(rev)
+    paths = []
+    for i in range(1, 7):
+        p = tmp_path / f"file{i}.txt"
+        p.write_bytes(b"".join(b"W%d line %d\r\n" % (j % 4, j)
+                               for j in range(i * 3)) + b"---\n")
+        paths.append(str(p))
+    rows = lambda df: sorted(map(tuple, df.collect()))
+    fwd = rows(read_word_per_line(spark, paths))
+    assert len(fwd) == sum(i * 3 + 1 for i in range(1, 7))
+    assert fwd == rows(read_word_per_line(spark, list(reversed(paths))))
+    assert (rows(build_index(spark, paths))
+            == rows(build_index(spark, list(reversed(paths)))))
 
 
 def test_wordcount_consistent_with_index(spark, sf_dir):

@@ -154,37 +154,61 @@ def test_foreach_batch_idempotent_sink(spark, sf_dir, tmp_path):
     assert batch_totals.exceptAll(stream_totals).count() == 0
 
 
-def test_wordline_streaming_index_parity(spark, tmp_path):
-    """The flagship index built INCREMENTALLY — reference corpus files
-    arriving one per micro-batch through the wordline stream source —
-    must equal the identical logical plan run in batch, string-exact
-    (sort_array pins arrival order away, as in the batch flagship)."""
-    import os
+# Every edge of the reference's corpus layout: a UTF-8 BOM first line,
+# CRLF endings, lines that normalize to empty, bytes above 0x7F and a
+# file with no trailing newline.
+WORDLINE_CORPUS = {
+    "file1.txt":
+        b"\xef\xbb\xbf\r\nThe\r\nquick\r\n---\r\nfox\r\nJumps\r\n",
+    "file2.txt": b"the\ncaf\xe9\n'tis\n\nfox\nlazy\ndog",
+    "file3.txt": b"Dog's\r\nday\r\n   \r\nthe\r\nquick\r\nfox\r\n",
+    "file4.txt": b"fox\nfox\n\xe9t\xe9\nend\n",
+}
+
+
+def _write_corpus(corpus, files: dict[str, bytes]) -> None:
+    corpus.mkdir(exist_ok=True)
+    for name, data in files.items():
+        (corpus / name).write_bytes(data)
+
+
+def _report(df) -> list[str]:
+    return sorted(f"{r.word}: {r.occurrences}" for r in df.collect())
+
+
+def _start_index(spark, corpus, name: str, checkpoint):
     from mapreduce_in_pthreads_spark.streaming import wordline_index as wi
 
-    corpus = "/root/reference/testfiles"
-    if not os.path.isdir(corpus):
-        pytest.skip("reference corpus not present")
+    return (wi.streaming_reference_index(spark, str(corpus))
+            .writeStream.format("memory")
+            .queryName(name).outputMode("complete")
+            .option("checkpointLocation", str(checkpoint))
+            .start())
 
-    q = (wi.streaming_reference_index(spark, corpus)
-         .writeStream.format("memory")
-         .queryName("mem_wordline_index").outputMode("complete")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .start())
+
+def test_wordline_streaming_index_parity(spark, tmp_path):
+    """The flagship index built INCREMENTALLY — corpus files arriving
+    one per micro-batch — equals the plain-Python spec mirror and the
+    batch ``build_index``, string-exact (sort_array pins arrival order
+    away, as in batch)."""
+    from mapreduce_in_pthreads_spark.cli import build_index
+
+    from .test_cli_and_sinks import _spec_report
+
+    corpus = tmp_path / "corpus"
+    _write_corpus(corpus, WORDLINE_CORPUS)
+    q = _start_index(spark, corpus, "mem_wordline_index", tmp_path / "ckpt")
     try:
         q.processAllAvailable()
         n_batches = len([p for p in q.recentProgress
                          if p["numInputRows"] > 0])
-        got = sorted(map(tuple,
-                         spark.table("mem_wordline_index").collect()))
+        got = _report(spark.table("mem_wordline_index"))
     finally:
         q.stop()
 
-    want = sorted(map(tuple,
-                      wi.batch_reference_index(spark, corpus).collect()))
     assert n_batches >= 2          # genuinely incremental, not one gulp
-    assert len(got) == 4135        # SURVEY corpus fact: distinct words
-    assert got == want
+    assert got == _spec_report(WORDLINE_CORPUS)
+    assert got == _report(build_index(spark, str(corpus)))
 
 
 def test_streaming_gap_fill_parity(spark, sf_dir, tmp_path):
@@ -210,48 +234,57 @@ def test_wordline_stream_picks_up_files_landing_mid_stream(spark, tmp_path):
     """Second wordline micro-batch scenario (SURVEY.md §7 stretch):
     corpus shards LAND WHILE THE QUERY IS RUNNING. The stream starts
     over a directory holding one shard, drains, then two more shards
-    are written and the SAME query drains again — the offset advances
-    over the grown listing (shards land in sorted-name order, the
-    production shard-naming contract the source documents) and the
-    complete-mode index equals the batch index over the final corpus.
-    The intermediate snapshot proves incremental consumption: it must
+    are written and the SAME query drains again; the complete-mode
+    index equals the batch index over the final corpus. The
+    intermediate snapshot proves incremental consumption: it must
     equal the batch index over shard 1 alone."""
-    import os
-    from mapreduce_in_pthreads_spark.streaming import wordline_index as wi
+    from mapreduce_in_pthreads_spark.cli import build_index
 
     corpus = tmp_path / "corpus"
-    os.makedirs(corpus)
-    (corpus / "shard-000.txt").write_text(
-        "the\nquick\nfox\nthe\nlazy\ndog\n")
-
-    q = (wi.streaming_reference_index(spark, str(corpus))
-         .writeStream.format("memory")
-         .queryName("mem_wordline_live").outputMode("complete")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .start())
+    _write_corpus(corpus,
+                  {"shard-000.txt": b"the\nquick\nfox\nthe\nlazy\ndog\n"})
+    q = _start_index(spark, corpus, "mem_wordline_live", tmp_path / "ckpt")
     try:
         q.processAllAvailable()
-        snap1 = sorted(map(tuple,
-                           spark.table("mem_wordline_live").collect()))
-        want1 = sorted(map(tuple,
-                           wi.batch_reference_index(
-                               spark, str(corpus)).collect()))
-        assert snap1 == want1 and len(snap1) == 5
+        snap1 = _report(spark.table("mem_wordline_live"))
+        assert snap1 == _report(build_index(spark, str(corpus)))
+        assert len(snap1) == 5
 
         (corpus / "shard-001.txt").write_text("quick\nbrown\nfox\n")
         (corpus / "shard-002.txt").write_text("dog\ndays\nthe\nend\n")
         q.processAllAvailable()
-        snap2 = sorted(map(tuple,
-                           spark.table("mem_wordline_live").collect()))
+        snap2 = _report(spark.table("mem_wordline_live"))
     finally:
         q.stop()
 
-    want2 = sorted(map(tuple,
-                       wi.batch_reference_index(spark,
-                                                str(corpus)).collect()))
-    assert snap2 == want2
+    assert snap2 == _report(build_index(spark, str(corpus)))
     assert len(snap2) == 8      # the, quick, fox, lazy, dog, brown, days, end
     assert snap2 != snap1       # the second drain actually changed the index
+
+
+def test_wordline_stream_reads_shard_landing_before_in_name_order(
+        spark, tmp_path):
+    """A shard whose name sorts FIRST lands after the stream has read
+    another one. The stream must read the new shard, and must not read
+    the old one again: the drained index equals the batch index over
+    both shards."""
+    from mapreduce_in_pthreads_spark.cli import build_index
+
+    corpus = tmp_path / "corpus"
+    _write_corpus(corpus, {"shard-001.txt": b"alpha\nbeta\n"})
+    q = _start_index(spark, corpus, "mem_wordline_order", tmp_path / "ckpt")
+    try:
+        q.processAllAvailable()
+        (corpus / "shard-000.txt").write_bytes(b"gamma\nalpha\n")
+        q.processAllAvailable()
+        got = _report(spark.table("mem_wordline_order"))
+    finally:
+        q.stop()
+
+    assert got == _report(build_index(spark, str(corpus)))
+    assert got == ["alpha: (shard-000.txt: 2), (shard-001.txt: 1)",
+                   "beta: (shard-001.txt: 2)",
+                   "gamma: (shard-000.txt: 1)"]
 
 
 def test_streaming_event_anomaly_parity(spark, sf_dir, tmp_path):
@@ -459,19 +492,19 @@ def test_streaming_runs_test_parity(spark, sf_dir, tmp_path):
 
 def test_wordline_stream_stream_join_parity(spark, tmp_path):
     """Adjacent-word pairs built by the stream-stream SELF-join over
-    the wordline source (files arriving one per micro-batch,
-    unwatermarked — per-file ordinals restart at 1, so an ordinal
-    watermark would drop later files' pairs) must equal the identical
-    logical plan in batch, multiset-exact — and must be non-trivial (pairs exist, and every
-    pair is line-adjacent with both words nonempty)."""
-    import os
+    the corpus (files arriving one per micro-batch, unwatermarked —
+    per-file ordinals restart at 1, so an ordinal watermark would drop
+    later files' pairs) must equal a plain-Python mirror and the
+    identical logical plan in batch, multiset-exact: pairs are
+    line-adjacent, both words nonempty, and a dropped line breaks a
+    pair."""
     from mapreduce_in_pthreads_spark.streaming import wordline_index as wi
 
-    corpus = "/root/reference/testfiles"
-    if not os.path.isdir(corpus):
-        pytest.skip("reference corpus not present")
+    from .test_cli_and_sinks import _spec_words
 
-    q = (wi.streaming_adjacent_word_pairs(spark, corpus)
+    corpus = tmp_path / "corpus"
+    _write_corpus(corpus, WORDLINE_CORPUS)
+    q = (wi.streaming_adjacent_word_pairs(spark, str(corpus))
          .writeStream.format("memory")
          .queryName("mem_wordline_pairs").outputMode("append")
          .option("checkpointLocation", str(tmp_path / "ckpt_pairs"))
@@ -483,8 +516,12 @@ def test_wordline_stream_stream_join_parity(spark, tmp_path):
     finally:
         q.stop()
 
-    want = sorted(map(tuple,
-                      wi.batch_adjacent_word_pairs(spark, corpus)
-                      .collect()))
-    assert len(got) > 1000
+    words = _spec_words(WORDLINE_CORPUS)
+    want = sorted(
+        (f, n, w1, w2)
+        for (f, n, w1), (g, m, w2) in zip(words, words[1:])
+        if f == g and w1 and w2)
+    assert len(want) == 9
     assert got == want
+    assert got == sorted(map(tuple, wi.batch_adjacent_word_pairs(
+        spark, str(corpus)).collect()))
